@@ -1,912 +1,221 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Per-query timer and job-count gate over the query registry at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Usage: python bench.py [q_name ...]    (no names: every query in SECTIONS)
 
-Methodology: one shared SparkSession (JVM startup excluded). One
-untimed warmup pass of every headline query first (whole-stage-codegen
-compilation + JIT + parquet footer caching are one-time costs a
-long-running deployment doesn't pay per query), then each query timed
-end-to-end in steady state (plan → execute → count). Queries span the
-operator families: scan-agg, joins (broadcast + star), windows, top-k,
-text, dedup, vectors — the mix a 100 TB deployment would run.
+Per query, in one shared SparkSession: one untimed warmup, then PASSES
+timed passes. Cached tables and persisted RDDs are released before the
+warmup and before every pass, so no pass reads an earlier one's cache.
+Each pass records ``build_s`` (the call that returns the DataFrame,
+including any eager actions the operator runs), ``exec_s`` (``count()``)
+and ``jobs`` (Spark jobs in the pass's own job group).
+
+Gate: for a fixed plan and fixture a query's job count is deterministic,
+so every query's ``jobs`` must agree across its passes and equal the
+committed BENCH_LOCAL.json's exactly; the run exits 1 when one differs,
+and reports queries missing from the baseline and an unusable baseline
+explicitly. Wall-time ratios
+against the baseline are printed to stderr for information only; wall-time
+claims belong to perfbench/ (``python3 perfbench/run.py --workload W
+--seed N``).
+
+A full run rewrites BENCH_LOCAL.json with the per-query record. The last
+stdout line is one JSON object: {"metric", "value", "unit", "queries",
+"sf"}, where ``queries`` maps each query to its median build_s + exec_s.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-HEADLINE = [
-    "q_agg_basic",
-    "q_join_star",
-    "q_join_broadcast",
-    "q_window_avg_two_grains",
-    "q_window_rank",
-    "q_topk",
-    "q_groupby_avg_orderby",
-    "q_text_wordcount",
-    "q_dedup_minhash",
-    "q_dedup_ngram_jaccard",
-    "q_similarity_topk",
-    "q_sql_tpch_q3",
-    "q_sql_tpch_q6",
-]
+from perfbench.probe import release_storage  # noqa: E402
 
-# round-2 heavyweights tracked separately so regressions in the newer
-# surface are visible without moving the cross-round headline baseline
-EXTENDED = [
-    "q_decontaminate",
-    "q_pagerank",
-    "q_entity_resolve",
-]
-
-# round-5: the Delta-CRUD analogs do real filesystem work (partition
-# writes, manifest commits, COW rewrites, compaction); tracked as their
-# own section so manifest/compaction I/O regressions are visible before
-# they reach a driver round
-VERSIONED_IO = [
-    "q_time_travel",
-    "q_merge_versioned",
-    "q_compact",
-    # round-13: manifest zone-map skipping (OPTIMIZE ZORDER write path
-    # + pruned read) — tracked so a regression in the stats-collection
-    # scan or the pruned-read planning shows up before a driver round
-    "q_versioned_zone_skip",
-    # round-14: sidecar-backed zones (spill + marker resolution on the
-    # pruned read); no committed baseline yet — the gate skips
-    # missing-baseline ids, so this starts trending next round
-    "q_versioned_sidecar",
-]
-
-# round-5 second wave: the LLM-corpus / retrieval / iterative additions
-# (BM25, chunking, bigram-LM scoring, k-means training, BFS) — tracked
-# as their own section so their cost trend is visible per round without
-# moving the cross-round headline baseline
-CORPUS_OPS = [
-    "q_bm25_rank",
-    "q_doc_chunk",
-    "q_lm_perplexity",
-    "q_feature_hash",
-    "q_kmeans",
-    "q_graph_bfs",
-    # round-5 fifth wave: web-corpus ingest + the flagship composition —
-    # the pipeline query's trend catches a regression in ANY of the four
-    # curation stages it chains
-    "q_url_canonicalize",
-    "q_token_entropy",
-    "q_curation_pipeline",
-]
-
-# round-5 third wave: analytics / sketch / retrieval operators
-ANALYTICS_OPS = [
-    "q_markov_transitions",
-    "q_time_interpolate",
-    "q_group_regress",
-    "q_skyline",
-    "q_phrase_search",
-    "q_sketch_rollup",
-    "q_heavy_hitters_cms",
-    "q_train_shuffle",
-    "q_join_interval_bucket",
-    "q_geo_radius_join",
-    "q_sketch_intersection",
-    "q_xml_ingest",
-]
-
-# round-5 fourth wave: mining / statistics / anti-entropy — the pair-
-# generation operators (assoc rules, PMI, simhash blocks, minhash
-# accuracy) are the ones whose cost would drift first if a prune
-# regressed, so their trend is tracked per round
-MINING_OPS = [
-    "q_assoc_rules",
-    "q_collocations_pmi",
-    "q_simhash_hamming",
-    "q_minhash_accuracy",
-    "q_rolling_distinct",
-    "q_abtest_welch",
-    "q_quantile_rollup",
-    "q_table_diff",
-]
-
-# round-5 fifth wave: real-decode multimodal fingerprints — fixture-
-# generated payloads (SF-independent), so these lines isolate the
-# Arrow mapInPandas decode+hash cost from any table-scan effect
-MULTIMODAL_OPS = [
-    "q_image_dedup",
-    "q_audio_dedup",
-    "q_multimodal_scene_detect",
-]
-
-# round 6: embedding-space curation (SemDeDup clusters, PCA power
-# iteration) + the DP release — iterative/model-state ops whose cost
-# is dominated by per-iteration aggregate passes, tracked per round
-ROUND6_OPS = [
-    "q_dedup_semantic",
-    "q_pca_power",
-    "q_dp_release",
-    "q_dedup_span",
-    "q_domain_mixture",
-    "q_mutual_info",
-    "q_ks_test",
-    "q_bitmap_rollup",
-    "q_ann_pq",
-    "q_random_projection",
-    "q_attribution_decay",
-]
-
-# round-7: scale-k SemDeDup (Arrow assignment tier) + the curation/
-# retrieval wave (DSIR selection, RRF fusion, hard negatives, kNN vote)
-ROUND7_OPS = [
-    "q_dedup_semantic_scaled",
-    "q_dsir_select",
-    "q_rrf_fusion",
-    "q_hard_negatives",
-    "q_knn_label_noise",
-    "q_stl_decompose",
-    "q_zipf_fit",
-    "q_forecast_backtest",
-    # wave 3: classifier / bootstrap / pattern / stats additions
-    "q_nb_classify",
-    "q_bootstrap_ci",
-    "q_event_pattern",
-    "q_stats_equidepth",
-    "q_graph_labelprop",
-    "q_anomaly_seasonal",
-    "q_changepoint_cusum",
-    "q_retrieval_eval",
-    "q_ann_ivfpq",
-    "q_forecast_conformal",
-    "q_percentile_weighted",
-    # wave 4: sequential testing / dedup capstone / model eval / mixtures
-    "q_abtest_sprt",
-    "q_dedup_savings",
-    "q_classifier_eval",
-    "q_sql_tpch_q1",
-    "q_doremi_step",
-    "q_mixture_concentration",
-    "q_topic_keywords",
-    # q_nb_cross_validate is 5 full NB plans (~7 s/pass at sf0.1) —
-    # deliberately NOT benched to keep the suite inside the 570 s
-    # harness budget; its cost trend is k x q_nb_classify's line
-]
-
-# round-8: survival / experimentation / calibration / diversity wave
-ROUND8_OPS = [
-    "q_survival_km",
-    "q_acf",
-    "q_abtest_cuped",
-    "q_calibration",
-    "q_gini",
-    "q_graph_kcore",
-    "q_mmr_diversify",
-    "q_seq_pairs",
-    "q_path_mining",
-    "q_item_cf",
-    "q_ccf",
-    "q_mannwhitney",
-    "q_survival_logrank",
-    "q_spearman",
-    "q_graph_jaccard",
-    "q_abtest_srm",
-    "q_abtest_did",
-]
-
-
+BASELINE = os.path.join(HERE, "BENCH_LOCAL.json")
 PASSES = 3
 
-
-def _control_fn(spark, sf_dir):
-    """The calm-mode control: a fixed scan-bound two-column lineitem
-    aggregate. Scan + hash-agg only — no joins, no windows, no Python —
-    so its run-to-run drift measures the MACHINE (CPU contention, page
-    cache, GC), not any operator under test."""
-    from pyspark.sql import functions as F
-
-    from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_quantity", "l_extendedprice"
-    )
-
-    def run() -> float:
-        t0 = time.perf_counter()
-        li.agg(F.sum("l_quantity"), F.sum("l_extendedprice")).collect()
-        return time.perf_counter() - t0
-
-    return run
-
-
-# per-query control time measured IMMEDIATELY BEFORE each query's timed
-# passes — the calm-mode (round-8 verdict item 4) drift reference
-_CONTROLS: dict[str, float] = {}
-
-
-def _smooth_controls(window: int = 5) -> None:
-    """Replace each per-query control with the MEDIAN of the ``window``
-    adjacent control runs (insertion order = measurement order). A
-    single 0.1 s control run varies ±40%, which is pure noise against a
-    0.3 s query — measured: an unchanged query ran 0.96× raw yet
-    flagged 1.7× calm because its one adjacent control happened to run
-    0.066 s against a 0.11 s run median. The windowed median keeps the
-    within-run drift signal (a sustained machine shift moves every
-    control in the window) at ~1/√window the variance."""
-    names = list(_CONTROLS)
-    vals = [_CONTROLS[n] for n in names]
-    half = window // 2
-    for i, n in enumerate(names):
-        w = sorted(vals[max(0, i - half): i + half + 1])
-        _CONTROLS[n] = round(w[len(w) // 2], 4)
-
-
-def _timed_pass(qs, names, spark, sf_dir, control=None, passes=None) -> dict[str, float]:
-    """Per query: MEDIAN over PASSES steady-state runs (round-7
-    verdict item 1). Ambient machine load has swung identical plans
-    ~1.6× between rounds (BENCH_r2 vs r3: even scan-bound TPC-H Q6
-    moved in lockstep with everything else). The median discards a
-    single ambient spike without understating the way min can — a
-    real slow creep raises every pass and therefore the median, while
-    min would keep reporting the one lucky pass and hide the creep
-    inside the ambient band.
-
-    Side channel: each query's max/min pass ratio is recorded into
-    ``_SPREADS`` — the per-run measured ambient noise. The payload
-    summarizes it (``ambient_spread``) and every regression entry
-    carries its own query's ratio, so a reader can tell "flagged
-    inside the noise band" from "flagged well beyond it" without
-    re-running anything.
-
-    Calm protocol (round-8 verdict item 4): when ``control`` is
-    given, it is run once immediately before each query's timed
-    passes and recorded in ``_CONTROLS[name]`` — the machine-drift
-    reference taken AT the query's measurement time. The regression
-    gate then compares ratio-to-control across rounds, so a
-    machine-wide shift (which moves query and control in lockstep)
-    cancels instead of flagging every unchanged plan.
-
-    ``passes`` (round-9 budget fit): the full suite at median-of-3
-    everywhere ran 556 s — against the 570 s harness budget. The
-    headline section (the cross-round baseline metric) keeps
-    median-of-3; the trend sections run 2 passes and report their
-    MEAN — with the calm control cancelling drift, the third pass
-    bought little, and a real creep raises both passes (and the
-    mean) just as it raised the median. Even counts report the mean,
-    odd counts the median.
-
-    ``passes`` may also be a callable ``name -> int`` (round-12 budget
-    fit, verdict item 8): the trend sections alternate mean-of-2 /
-    single-pass per query by round parity — see :func:`_trend_passes`."""
-    timings: dict[str, float] = {}
-    for name in names:
-        if passes is None:
-            n_passes = PASSES
-        elif callable(passes):
-            n_passes = int(passes(name))
-        else:
-            n_passes = int(passes)
-        if control is not None:
-            _CONTROLS[name] = round(control(), 4)
-        runs = []
-        for _ in range(n_passes):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        if len(runs) % 2:
-            est = runs[len(runs) // 2]
-        else:
-            est = sum(runs) / len(runs)
-        timings[name] = round(est, 3)
-        if runs[0] > 0:
-            _SPREADS[name] = round(runs[-1] / runs[0], 2)
-    return timings
+SECTIONS = {
+    "relational": [
+        "q_topk", "q_sql_tpch_q1", "q_sql_tpch_q3", "q_sql_tpch_q6",
+        "q_skyline", "q_table_diff", "q_train_shuffle", "q_xml_ingest",
+    ],
+    "joins": [
+        "q_join_star", "q_join_broadcast", "q_join_salted",
+        "q_join_bloom_prefilter", "q_join_interval_bucket",
+        "q_geo_radius_join", "q_entity_resolve",
+    ],
+    "aggregates": [
+        "q_agg_basic", "q_groupby_avg_orderby", "q_sketch_rollup",
+        "q_heavy_hitters_cms", "q_sketch_intersection", "q_bitmap_rollup",
+        "q_quantile_rollup", "q_percentile_weighted", "q_stats_equidepth",
+        "q_group_regress", "q_gini", "q_dp_release",
+    ],
+    "windows": [
+        "q_window_avg_two_grains", "q_window_rank", "q_rolling_distinct",
+        "q_time_interpolate", "q_markov_transitions", "q_event_pattern",
+    ],
+    "text_dedup": [
+        "q_text_wordcount", "q_dedup_minhash", "q_dedup_ngram_jaccard",
+        "q_simhash_hamming", "q_minhash_accuracy", "q_dedup_span",
+        "q_dedup_savings", "q_decontaminate", "q_bm25_rank", "q_doc_chunk",
+        "q_phrase_search", "q_lm_perplexity", "q_feature_hash",
+        "q_url_canonicalize", "q_token_entropy", "q_curation_pipeline",
+        "q_domain_mixture", "q_dsir_select", "q_doremi_step",
+        "q_mixture_concentration", "q_zipf_fit", "q_nb_classify",
+        "q_topic_keywords",
+    ],
+    "vectors": [
+        "q_similarity_topk", "q_kmeans", "q_dedup_semantic",
+        "q_dedup_semantic_scaled", "q_pca_power", "q_random_projection",
+        "q_ann_pq", "q_ann_ivfpq", "q_rrf_fusion", "q_hard_negatives",
+        "q_knn_label_noise", "q_retrieval_eval", "q_mmr_diversify",
+        "q_item_cf",
+    ],
+    "graph": [
+        "q_pagerank", "q_graph_bfs", "q_graph_labelprop", "q_graph_kcore",
+        "q_graph_jaccard",
+    ],
+    "versioned_io": [
+        "q_time_travel", "q_merge_versioned", "q_compact",
+        "q_versioned_zone_skip", "q_versioned_sidecar",
+    ],
+    "timeseries_stats": [
+        "q_stl_decompose", "q_forecast_backtest", "q_forecast_conformal",
+        "q_anomaly_seasonal", "q_changepoint_cusum", "q_acf", "q_ccf",
+        "q_survival_km", "q_survival_logrank", "q_abtest_welch",
+        "q_abtest_sprt", "q_abtest_cuped", "q_abtest_srm", "q_abtest_did",
+        "q_ks_test", "q_mannwhitney", "q_spearman", "q_mutual_info",
+        "q_bootstrap_ci", "q_calibration", "q_classifier_eval",
+        "q_attribution_decay",
+    ],
+    "mining": [
+        "q_assoc_rules", "q_collocations_pmi", "q_seq_pairs", "q_path_mining",
+    ],
+    "multimodal": ["q_image_dedup", "q_audio_dedup", "q_multimodal_scene_detect"],
+}
 
 
-# per-query max/min pass ratio from the most recent _timed_pass calls
-# (retime passes overwrite — the freshest measurement wins)
-_SPREADS: dict[str, float] = {}
-
-
-def _upcoming_round() -> int:
-    """The next driver round, from the newest CORRECTNESS_r{N}.json —
-    the same convention tests/test_registry.py uses. 1 when no driver
-    results exist (fresh checkout)."""
-    import glob as _g
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for f in _g.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-        if (m := _re.search(r"CORRECTNESS_r(\d+)\.json$", f))
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
-# This run's 2-pass half, resolved once per run by _resolve_two_pass():
-# the COMPLEMENT of the half the committed baseline RECORDED as 2-pass
-# (round-13 verdict item 6 — the round-parity hash assumed consecutive
-# runs see consecutive _upcoming_round values, which the r12 history
-# could not confirm: the driver's refresh and the builder's quiet run
-# can land at the same round number. Recording the half and taking its
-# complement makes two-consecutive-runs coverage hold by construction,
-# with no cadence assumption). None until resolved → parity fallback.
-_TWO_PASS_SET: set | None = None
-
-
-def _resolve_two_pass(trend_names: list) -> list:
-    """Fix this run's 2-pass half: queries NOT in the baseline's
-    recorded ``trend_two_pass`` (so the halves alternate run-over-run
-    and a brand-new query starts with the better estimate); parity-hash
-    split when the baseline predates the field."""
-    global _TWO_PASS_SET
-    path = os.environ.get(
-        "SPARK_GRAFT_BENCH_BASELINE",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
-    )
-    prev_two: list | None = None
+def _pass(spark, fn, sf_dir: str, group: str) -> dict:
+    """One pass of ``fn`` from released storage, inside job group ``group``."""
+    sc = spark.sparkContext
+    release_storage(spark)
+    sc.setJobGroup(group, group)
     try:
-        with open(path) as fh:
-            prev_two = json.load(fh).get("trend_two_pass")
-    except (OSError, ValueError):
-        prev_two = None
-    if isinstance(prev_two, list):
-        _TWO_PASS_SET = {q for q in trend_names if q not in set(prev_two)}
-    else:
-        import zlib as _z
-
-        r = _upcoming_round()
-        _TWO_PASS_SET = {
-            q for q in trend_names if (_z.crc32(q.encode()) + r) % 2 == 0
-        }
-    return sorted(_TWO_PASS_SET)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.count()
+        t2 = time.perf_counter()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return {"build_s": round(t1 - t0, 4), "exec_s": round(t2 - t1, 4), "jobs": jobs}
 
 
-def _trend_passes(name: str) -> int:
-    """Round-12 budget fit (verdict item 8): the full suite at
-    trend-sections-mean-of-2 ran ~490 s against the 570 s harness cap
-    (and over the 500 s headroom target) once q_compact moved to the
-    versioned OPTIMIZE path. Trim: each round, only HALF the trend
-    queries run mean-of-2; the other half run a single pass, so every
-    query gets a 2-pass estimate at least every other run. The half is
-    the complement of the baseline's recorded half when available
-    (:func:`_resolve_two_pass`); otherwise a stable per-query hash
-    XOR'd with the round parity. Noise cost is bounded: a spurious
-    single-pass flag triggers the existing retime pass (median-of-3,
-    min-merged), and the calm control still runs before EVERY query
-    either way."""
-    if _TWO_PASS_SET is not None:
-        return 2 if name in _TWO_PASS_SET else 1
-    import zlib as _z
-
-    return 2 if (_z.crc32(name.encode()) + _upcoming_round()) % 2 == 0 else 1
-
-
-def _spread_summary() -> dict[str, float]:
-    """Distribution of within-run pass spreads: the measured noise
-    floor of THIS bench run. A ~1.1 median says passes are stable and
-    a 1.3× cross-round flag is signal; a ~1.5 median says the whole
-    run sits in ambient churn and flags need the retime record."""
-    if not _SPREADS:
-        return {}
-    vals = sorted(_SPREADS.values())
+def measure(spark, fn, sf_dir: str, name: str) -> dict:
+    """Warmup plus PASSES timed passes; medians of the times, and the job
+    count every pass must agree on (``jobs_per_pass`` keeps them all)."""
+    _pass(spark, fn, sf_dir, f"bench:{name}:warmup")
+    runs = [_pass(spark, fn, sf_dir, f"bench:{name}:{i}") for i in range(PASSES)]
     return {
-        "median": vals[len(vals) // 2],
-        "p90": vals[min(len(vals) - 1, int(len(vals) * 0.9))],
-        "max": vals[-1],
+        "build_s": round(statistics.median(r["build_s"] for r in runs), 4),
+        "exec_s": round(statistics.median(r["exec_s"] for r in runs), 4),
+        "jobs": runs[0]["jobs"],
+        "jobs_per_pass": [r["jobs"] for r in runs],
     }
 
 
-def _bloom_bench(spark, sf_dir) -> dict[str, float]:
-    """Bloom semi-join reduction, measured: lineitem ⋈ (p_size=15
-    parts) as a plain broadcast join vs the same join behind
-    bloom_prefilter. Each timed pass re-runs the whole lifecycle, so
-    the bloom line carries the CONSTANT build cost (a second Spark job:
-    dim aggregate + ≤256-row collect, ~0.5 s of local job latency) on
-    top of the probe filter, which itself is ~free (xxhash64 +
-    literal-array element_at measured at scan speed). On local[32]
-    against a broadcast join there is no shuffle to avoid, so plain
-    wins; at 100 TB the build amortizes over the fact scan and the
-    prefilter pays as shuffle/IO avoided (probe side drops to ~the
-    match set before any exchange)."""
-    from pyspark.sql import functions as F
+def gate(record: dict, path: str = BASELINE) -> dict:
+    """Compare this run's per-query job counts with the baseline file.
 
-    from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
-    from nyc_tlc_trip_data_pipelines_spark.operators.joins import bloom_prefilter
-
-    li = load_table(spark, sf_dir, "lineitem")
-    parts = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 15)
-
-    def plain():
-        return li.join(F.broadcast(parts), li.l_partkey == parts.p_partkey).groupBy(
-            "l_returnflag"
-        ).count()
-
-    def bloomed():
-        # min_big_bytes=0: this line exists to MEASURE the bloom
-        # lifecycle, so the production big-side floor (which would
-        # skip it at bench SF) is disabled here
-        pruned = bloom_prefilter(li, "l_partkey", parts, "p_partkey", min_big_bytes=0)
-        return pruned.join(F.broadcast(parts), pruned.l_partkey == parts.p_partkey).groupBy(
-            "l_returnflag"
-        ).count()
-
-    out: dict[str, float] = {}
-    for name, fn in (("plain_join", plain), ("bloom_prefiltered", bloomed)):
-        fn().count()  # warmup
-        runs = []
-        for _ in range(PASSES):
-            t0 = time.perf_counter()
-            fn().count()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        out[name] = round(runs[len(runs) // 2], 3)
+    ``changed``: queries whose ``jobs`` differ from the baseline, or vary
+    across this run's passes; ``new``: queries the baseline lacks;
+    ``error``: why the baseline could not be used (then every query is
+    reported as new); ``wall_ratio``: now / baseline median wall time,
+    information only."""
+    out = {"vs": os.path.basename(path), "error": None, "changed": [], "new": [],
+           "wall_ratio": {}}
+    try:
+        with open(path) as fh:
+            base = {q: (int(r["jobs"]), r["build_s"] + r["exec_s"])
+                    for q, r in json.load(fh)["queries"].items()}
+    except (OSError, ValueError, KeyError, TypeError, AttributeError) as exc:
+        out["error"] = f"unusable baseline {path}: {type(exc).__name__}: {exc}"
+        base = {}
+    for q, r in record.items():
+        jobs, wall = base.get(q, (None, 0))
+        if jobs is None:
+            out["new"].append(q)
+        if (jobs is not None and jobs != r["jobs"]) or len(set(r["jobs_per_pass"])) > 1:
+            out["changed"].append({"query": q, "was": jobs, "now": r["jobs_per_pass"]})
+        if wall > 0:
+            out["wall_ratio"][q] = round((r["build_s"] + r["exec_s"]) / wall, 2)
     return out
 
 
-def _skew_bench(spark, sf_dir) -> dict[str, float]:
-    """Skew-join hardening proof (round-5 verdict item 6): one hot key
-    holds 50% of the fact rows (orders with even o_orderkey collapse to
-    key 0). Times the plain shuffle equi-join vs operators/skew
-    salted_join on the same fixture, with auto-broadcast and AQE
-    skew-splitting disabled so the comparison isolates the salting —
-    i.e. the regime where a 100 TB deployment reaches for salting
-    because the dim is too big to broadcast and AQE splitting isn't
-    enough.
-
-    READING THE NUMBERS: at bench SF the hot key is only ~10^4..10^5
-    rows — one task absorbs it in well under a second, so PLAIN WINS
-    and the salted line records salting's constant overhead (16×
-    dim replication + extra hash). That is the honest small-scale
-    result; the crossover needs a hot key that overwhelms a task
-    (10^7+ rows). What the line buys per round: (a) a regression
-    fence on the salted plan's overhead, (b) the plain/salted ratio
-    TREND if the driver ever benches a larger SF.
-    """
-    from pyspark.sql import functions as F
-
-    from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
-    from nyc_tlc_trip_data_pipelines_spark.operators.skew import salted_join
-
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    skewed = o.withColumn(
-        "k",
-        F.when(F.col("o_orderkey") % 2 == 0, F.lit(0).cast("long")).otherwise(
-            F.col("o_custkey").cast("long")
-        ),
-    ).select("k", "o_orderkey")
-    dim = (
-        skewed.select("k")
-        .distinct()
-        .withColumn("payload", (F.col("k") % 25).cast("int"))
-    )
-
-    def plain():
-        return skewed.join(dim, "k").groupBy("payload").count()
-
-    def salted():
-        return salted_join(skewed, dim, ["k"], salt_buckets=16).groupBy("payload").count()
-
-    confs = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.skewJoin.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        out: dict[str, float] = {}
-        for name, fn in (("plain_hotkey", plain), ("salted_hotkey", salted)):
-            fn().count()  # warmup
-            runs = []
-            for _ in range(PASSES):
-                t0 = time.perf_counter()
-                fn().count()
-                runs.append(time.perf_counter() - t0)
-            runs.sort()
-            out[name] = round(runs[len(runs) // 2], 3)
-        return out
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-
-
-def _flat_timings(prev: dict) -> dict[str, float]:
-    """Per-query timings from a bench JSON object: every numeric value
-    inside any nested section dict (the driver wraps the real object
-    under "parsed")."""
-    if isinstance(prev.get("parsed"), dict):
-        prev = prev["parsed"]
-    flat: dict[str, float] = {}
-    for key, val in prev.items():
-        if key in ("controls", "retimes"):
-            continue  # calm references / audit records, not timings
-        if isinstance(val, dict):
-            for q, t in val.items():
-                if isinstance(t, (int, float)) and q.startswith("q_"):
-                    flat[q] = float(t)
-    return flat
-
-
-def _flat_controls(prev: dict) -> tuple[dict[str, float], float | None]:
-    """Calm references from a bench payload: the per-query control
-    times (stored under ``controls`` with ``c:`` key prefixes so the
-    tail-recovery regex for timings can never confuse them) and the
-    run-level control median. Tail fallback mirrors _flat_from_tail."""
-    import re
-
-    if isinstance(prev.get("parsed"), dict):
-        prev = prev["parsed"]
-    per_q = {
-        k[2:]: float(v)
-        for k, v in (prev.get("controls") or {}).items()
-        if isinstance(v, (int, float)) and k.startswith("c:")
-    }
-    run_level = prev.get("control_sec")
-    # Round-9 ADVICE: reject a zero/invalid control EXPLICITLY, not by
-    # truthiness — a pathologically fast control that rounds to 0.0 is
-    # unusable as a normalization reference and must read as missing.
-    if not isinstance(run_level, (int, float)) or run_level <= 0:
-        run_level = None
-    if not per_q and run_level is None and isinstance(prev.get("tail"), str):
-        per_q = {
-            q: float(t)
-            for q, t in re.findall(
-                r'"c:(q_\w+)":\s*([0-9]+(?:\.[0-9]+)?)', prev["tail"]
-            )
-        }
-        m = re.search(r'"control_sec":\s*([0-9]+(?:\.[0-9]+)?)', prev["tail"])
-        if m and float(m.group(1)) > 0:
-            run_level = float(m.group(1))
-    per_q = {q: t for q, t in per_q.items() if t > 0}
-    return per_q, (float(run_level) if run_level is not None else None)
-
-
-def _flat_from_tail(prev: dict) -> dict[str, float]:
-    """Best-effort baseline recovery from a driver wrapper whose
-    ``parsed`` is null: the ``tail`` field holds the LAST ~2000 chars
-    of the bench stdout — a head-truncated fragment of the JSON line —
-    so a targeted regex over `"q_*": <number>` pairs recovers every
-    per-query timing the fragment still contains (regression-list
-    entries don't match: their numbers sit under "prev"/"now", not a
-    q_* key). Round-6 verdict item 2: without this, a parsed:null
-    wrapper as the newest BENCH file silently disabled the gate."""
-    import re
-
-    tail = prev.get("tail")
-    if not isinstance(tail, str):
-        return {}
-    return {
-        q: float(t)
-        for q, t in re.findall(r'"(q_\w+)":\s*([0-9]+(?:\.[0-9]+)?)', tail)
-    }
-
-
-def _baseline() -> tuple[str | None, dict[str, float]]:
-    """Pick the regression baseline: $SPARK_GRAFT_BENCH_BASELINE if set
-    (explicit path — lets a same-round re-run compare against the
-    PRIOR round instead of its own output), else walk BENCH_r*.json
-    newest → oldest and take the first file that yields any per-query
-    timings, reconstructing from the driver wrapper's tail when
-    ``parsed`` is null. Never silently returns an empty baseline while
-    naming a file."""
-    import glob
-    import re
-
-    _BASELINE_CONTROLS.clear()
-
-    def _note_controls(prev: dict, qset) -> None:
-        per_q, run_level = _flat_controls(prev)
-        for q in qset:
-            c = per_q.get(q, run_level)
-            if c is not None and c > 0 and q not in _BASELINE_CONTROLS:
-                _BASELINE_CONTROLS[q] = c
-
-    override = os.environ.get("SPARK_GRAFT_BENCH_BASELINE")
-    if override:
-        try:
-            with open(override) as fh:
-                prev = json.load(fh)
-        except (OSError, ValueError):
-            prev = {}
-        flat = _flat_timings(prev) or _flat_from_tail(prev)
-        if flat:
-            _note_controls(prev, flat)
-            return os.path.basename(override), flat
-        # unusable override (typo'd path, empty JSON) must not turn
-        # the gate off — print a loud stderr note and fall through to
-        # the BENCH_r*.json walk
-        print(
-            f"bench: SPARK_GRAFT_BENCH_BASELINE={override!r} yielded no "
-            "timings; falling back to the BENCH_r*.json walk",
-            file=sys.stderr,
-        )
-    here = os.path.dirname(os.path.abspath(__file__))
-    # pair each path with its round number FIRST — a stray
-    # BENCH_rX.json would match the glob but not the regex, and a
-    # .group(1) on None inside the sort key kills the whole bench run
-    numbered = []
-    # the committed BENCH_LOCAL.json is the FULL payload of the most
-    # recent bench run (every run rewrites it, every round commits
-    # it), so it outranks the driver wrappers — whose 2000-char stdout
-    # tails can't hold the per-query calm references
-    local = os.path.join(here, "BENCH_LOCAL.json")
-    if os.path.exists(local):
-        numbered.append((1 << 30, local))
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)", p)
-        if m:
-            numbered.append((int(m.group(1)), p))
-    # union newest-wins: a tail-reconstructed wrapper only covers the
-    # sections its 2000-char fragment kept (BENCH_r06 lost the whole
-    # headline section), so keep walking and fill gaps from older
-    # files — every query gets its MOST RECENT available baseline
-    merged: dict[str, float] = {}
-    names: list[str] = []
-    for _, path in sorted(numbered, reverse=True):
-        try:
-            with open(path) as fh:
-                prev = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        flat = _flat_timings(prev) or _flat_from_tail(prev)
-        fresh = {q: t for q, t in flat.items() if q not in merged}
-        if fresh:
-            _note_controls(prev, fresh)
-            merged.update(fresh)
-            names.append(os.path.basename(path))
-    return ("+".join(names) if names else None), merged
-
-
-# q -> the control reference paired with that query's BASELINE timing
-# (same file, per-query when recorded, else that run's control_sec).
-# Filled by _baseline(); kept module-level so _baseline's public
-# 2-tuple signature — which tests and tools pin — stays unchanged.
-_BASELINE_CONTROLS: dict[str, float] = {}
-
-
-def _regressions(current: dict[str, float], threshold: float = 1.3):
-    """Machine-checkable regression gate (round-5 verdict item 8):
-    compare every per-query timing against the most recent usable
-    BENCH_r*.json in the repo root and list queries slower than
-    ``threshold``× their previous-round time. Returns (baseline_name,
-    [{query, prev, now, ratio}, ...]); empty when no prior bench
-    exists.
-
-    Calm normalization (round-8 verdict item 4): when BOTH sides have
-    a control reference — this run's adjacent control in ``_CONTROLS``
-    and the baseline's in ``_BASELINE_CONTROLS`` — the flag decision
-    uses the ratio of ratios-to-control,
-        (now/ctrl_now) / (prev/ctrl_prev),
-    so a machine-wide shift that moves query and control in lockstep
-    cancels, while a genuine plan regression (query moves, control
-    doesn't) still trips. Entries keep the RAW ratio for continuity
-    and add ``ratio_calm`` + ``basis``; raw-flagged-but-calm-cleared
-    queries land in ``_AMBIENT_DISMISSED`` for the payload, so the
-    cancellation is auditable, never silent."""
-    name, flat_prev = _baseline()
-    _AMBIENT_DISMISSED.clear()
-    out = []
-    for q, now in current.items():
-        p = flat_prev.get(q)
-        # sub-0.15 s timings are scheduler noise, not plans
-        if p is None or p < 0.15:
-            continue
-        raw = now / p
-        pc, nc = _BASELINE_CONTROLS.get(q), _CONTROLS.get(q)
-        calm_ok = (
-            pc is not None and pc > 0 and nc is not None and nc > 0
-        )
-        calm = (now / nc) / (p / pc) if calm_ok else None
-        # calm-basis flags also need raw > 1.1: residual control noise
-        # (a ±10-20% reference error on a 0.1 s control) can push an
-        # unchanged sub-0.5 s query's calm ratio past the threshold
-        # while its raw time barely moved — a true >=1.3x plan
-        # regression on a steady machine always moves raw well past
-        # 1.1, and a regression masked by a genuine machine-wide
-        # SPEEDUP surfaces next round against the refreshed baseline.
-        flagged = (
-            calm > threshold and raw > 1.1
-            if calm is not None
-            else raw > threshold
-        )
-        if flagged:
-            entry = {"query": q, "prev": p, "now": now, "ratio": round(raw, 2)}
-            if calm is not None:
-                entry["ratio_calm"] = round(calm, 2)
-                entry["basis"] = "normalized"
-            else:
-                entry["basis"] = "raw"
-            if q in _SPREADS:
-                # this run's own pass spread for the same query: the
-                # flag's measured noise context
-                entry["pass_spread"] = _SPREADS[q]
-            out.append(entry)
-        elif raw > threshold and calm is not None:
-            _AMBIENT_DISMISSED.append(
-                {"query": q, "ratio": round(raw, 2), "ratio_calm": round(calm, 2)}
-            )
-    out.sort(key=lambda r: -r["ratio"])
-    return name, out
-
-
-# raw-threshold crossers the calm normalization cleared this run —
-# published in the payload so drift cancellation is auditable
-_AMBIENT_DISMISSED: list[dict] = []
-
-
-def main() -> None:
+def main(argv: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    section_of = {q: s for s, qs in SECTIONS.items() for q in qs}
+    names = argv or list(section_of)
+
     import __spark_entry__ as E
     from nyc_tlc_trip_data_pipelines_spark.session import get_spark
 
-    spark = get_spark("bench")
     qs = E.queries()
-
-    # --headline-only: the quick calm-protocol loop (two consecutive
-    # runs' normalized_total agreeing within 5% is the stability
-    # criterion) — times ONLY the headline section, same JSON contract
-    headline_only = "--headline-only" in sys.argv
-
-    sections = [("queries", HEADLINE)] if headline_only else [
-        ("queries", HEADLINE), ("extended", EXTENDED),
-        ("versioned_io", VERSIONED_IO), ("corpus_ops", CORPUS_OPS),
-        ("analytics_ops", ANALYTICS_OPS), ("mining_ops", MINING_OPS),
-        ("multimodal_ops", MULTIMODAL_OPS), ("round6_ops", ROUND6_OPS),
-        ("round7_ops", ROUND7_OPS), ("round8_ops", ROUND8_OPS),
-    ]
-
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"bench: unknown query ids {unknown}", file=sys.stderr)
+        return 2
+    spark = get_spark("bench")
     t_start = time.perf_counter()
-
-    def _mark(label: str) -> None:
-        # section progress to stderr: stdout stays the one JSON line,
-        # and a budget overrun is attributable to a section after the
-        # fact instead of a silent timeout
-        print(f"bench: {label} at {time.perf_counter() - t_start:.0f}s",
-              file=sys.stderr, flush=True)
-
-    # untimed warmup pass: codegen compile, JIT, parquet footers
-    for key, names in sections:
-        for name in names:
-            qs[name](spark, sf_dir).count()
-        _mark(f"warmup:{key}")
-
-    # calm-protocol control (round-8 verdict item 4): calibrate the
-    # scan-bound control, then re-run it adjacent to every query
-    control = _control_fn(spark, sf_dir)
-    control()  # warmup
-    control_runs = sorted(control() for _ in range(PASSES))
-    control_sec = round(control_runs[len(control_runs) // 2], 4)
-
-    _CONTROLS.clear()
-    trend_two_pass = _resolve_two_pass(
-        [n for key, names in sections if key != "queries" for n in names]
-    )
-    section_timings = {}
-    for key, names in sections:
-        section_timings[key] = _timed_pass(
-            qs, names, spark, sf_dir, control=control,
-            # headline keeps median-of-3 (cross-round baseline metric);
-            # trend sections alternate mean-of-2 / single-pass per
-            # query by round parity (_trend_passes) to fit the budget
-            passes=PASSES if key == "queries" else _trend_passes,
+    record: dict[str, dict] = {}
+    for name in names:
+        record[name] = {"section": section_of.get(name), **measure(spark, qs[name], sf_dir, name)}
+        r = record[name]
+        print(
+            f"bench: {name} build_s={r['build_s']} exec_s={r['exec_s']} "
+            f"jobs={r['jobs_per_pass']} at {time.perf_counter() - t_start:.0f}s",
+            file=sys.stderr, flush=True,
         )
-        _mark(f"timed:{key}")
-    timings = section_timings["queries"]
-    _smooth_controls()
-    skew_join = {} if headline_only else _skew_bench(spark, sf_dir)
-    bloom_join = {} if headline_only else _bloom_bench(spark, sf_dir)
-    _mark("skew+bloom")
-    all_timings = {q: t for sec in section_timings.values() for q, t in sec.items()}
-    baseline_name, regressions = _regressions(all_timings)
-    retimes: dict[str, dict[str, float]] = {}
-    if regressions:
-        # Confirmation pass: ambient load swings identical sub-second
-        # plans ~1.5x between runs (the flagged set differs every run
-        # under load). Re-measure ONLY the flagged queries; a real
-        # plan regression reproduces, scheduler noise does not. Keep
-        # the better (min) of the two measurements per query, but
-        # record BOTH in the output (round-6 verdict item 7) so a
-        # human can audit what the gate dismissed — min() can only
-        # erase flags, never manufacture them.
-        names = [r["query"] for r in regressions]
-        # control=None: the flagged queries keep their SMOOTHED calm
-        # references from the main pass — a fresh single control run
-        # here would reintroduce exactly the variance _smooth_controls
-        # removed
-        retimed = _timed_pass(qs, names, spark, sf_dir)
-        for grp in section_timings.values():
-            for q in list(grp):
-                if q in retimed:
-                    retimes[q] = {"first": grp[q], "retimed": retimed[q]}
-                    if retimed[q] < grp[q]:
-                        grp[q] = retimed[q]
-        all_timings = {
-            q: t for sec in section_timings.values() for q, t in sec.items()
-        }
-        baseline_name, regressions = _regressions(all_timings)
-    total = round(sum(timings.values()), 3)
+
+    verdict = gate(record)
+    for q, ratio in sorted(verdict["wall_ratio"].items(), key=lambda kv: -kv[1]):
+        print(f"bench: wall {q} {ratio}x baseline (information only)", file=sys.stderr)
+    if verdict["error"]:
+        print(f"bench: {verdict['error']}", file=sys.stderr)
+    for q in verdict["new"]:
+        print(f"bench: {q} has no baseline job count (new)", file=sys.stderr)
+    for c in verdict["changed"]:
+        print(f"bench: JOB COUNT CHANGED {c['query']}: {c['was']} -> {c['now']}",
+              file=sys.stderr)
+
     try:
-        sf_label = float(
-            os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-        )
-    except ValueError:  # non-"sfX" dir names (e.g. the sf1 tier path)
+        sf_label: float | str = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:  # non-"sfX" directory names
         sf_label = sf_dir
-    # normalized headline total: Σ t_q / ctrl_q — the drift-cancelled
-    # stability metric (two consecutive calm runs should agree ≤5%)
-    normalized_total = round(
-        sum(t / _CONTROLS[q] for q, t in timings.items() if _CONTROLS.get(q)), 3
-    )
-    payload = {
-                "metric": "headline_queries_total_time",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-    }
-    for key, sec in section_timings.items():
-        if key == "queries":
-            continue
-        payload[key] = sec
-        payload[f"{key}_total"] = round(sum(sec.values()), 3)
-    payload.update({
-                "skew_join": skew_join,
-                "bloom_join": bloom_join,
-                # per-query calm references go BEFORE the gate outputs:
-                # the driver keeps only the stdout TAIL, and the small
-                # decision keys below must survive truncation
-                "controls": {f"c:{q}": c for q, c in _CONTROLS.items()},
-                "regressions_vs": baseline_name,
-                "regressions": regressions,
-                "ambient_dismissed": list(_AMBIENT_DISMISSED),
-                "retimes": retimes,
-                "ambient_spread": _spread_summary(),
-                "passes": {"headline": PASSES, "sections": 2, "retime": PASSES},
-                # the half that ran mean-of-2 this run; the next run
-                # takes the complement (round-13 verdict item 6), so
-                # two consecutive runs cover the full trend set by
-                # construction — auditable here, no cadence assumption
-                "trend_two_pass": trend_two_pass,
-                "trend_round": _upcoming_round(),
-                "control_sec": control_sec,
-                "normalized_total": normalized_total,
-                "sf": sf_label,
-    })
-    # Stdout contract (r15 fix, round-14 verdict item 2): the driver
-    # json-parses the LAST stdout line and keeps only a ~2000-char
-    # stdout tail, so the full multi-KB payload printed here in rounds
-    # 6-14 was always truncated mid-object and the driver scored
-    # `parsed: null` every round. The final stdout line is now a
-    # COMPACT summary — metric/value/unit/headline queries/sf, well
-    # under 1500 chars — while the full payload (trend sections,
-    # controls, regression gate, dismissals) goes to BENCH_LOCAL.json
-    # as before and to stderr for human tail-reading.
-    compact = {
-        "metric": payload["metric"],
-        "value": payload["value"],
-        "unit": payload["unit"],
-        "queries": timings,
-        "control_sec": control_sec,
-        "normalized_total": normalized_total,
+    walls = {q: round(r["build_s"] + r["exec_s"], 3) for q, r in record.items()}
+    if not argv:
+        payload = {"sf": sf_label, "passes": PASSES, "gate": verdict, "queries": record}
+        with open(BASELINE, "w") as fh:
+            json.dump(payload, fh, indent=1)
+            fh.write("\n")
+    print(json.dumps({
+        "metric": "queries_total_time",
+        "value": round(sum(walls.values()), 3),
+        "unit": "sec",
+        "queries": walls,
         "sf": sf_label,
-    }
-    print(json.dumps(payload), file=sys.stderr)
-    # --headline-only runs never write BENCH_LOCAL.json: a 13-query
-    # quick loop must not replace the full-registry baseline the calm
-    # gate reads.
-    if not headline_only:
-        try:
-            here = os.path.dirname(os.path.abspath(__file__))
-            with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
-                json.dump(payload, fh, indent=1)
-        except OSError:
-            pass  # read-only checkout must not break the stdout contract
-    print(json.dumps(compact))
+    }))
+    return 1 if verdict["changed"] else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

@@ -775,6 +775,31 @@ def append_versioned(
         return n
 
 
+def _leaf_job(job_col: str) -> Column:
+    """The job id of the ``{job_col}=<job>`` directory directly holding
+    each input file. Anchored to the leaf directory, so a parent path
+    segment that looks like one (``/data/__job_id=archive/tbl``) cannot
+    match; ``''`` when the file does not sit directly in a job directory."""
+    from pyspark.sql import functions as F
+
+    job_rx = re.escape(job_col) + "=([^/]+)/[^/]*$"
+    return F.regexp_extract(F.input_file_name(), job_rx, 1)
+
+
+def _checked_jobs(found: set[str], jobs: Sequence[str], path: str) -> set[str]:
+    """Fail loudly when collected ``_leaf_job`` values break the flat
+    one-directory-per-job layout: ``''`` (a file nested below its job
+    directory) or a job the tip manifest does not list would otherwise
+    read as "job unaffected" and silently skip its rewrite."""
+    bad = sorted(j for j in found if j == "" or j not in jobs)
+    if bad:
+        raise ValueError(
+            f"{path}: matched rows in files outside the tip's job "
+            f"directories (extracted jobs {bad!r}, tip jobs {list(jobs)!r})"
+        )
+    return found
+
+
 def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
     """Copy-on-write row-level DELETE over a versioned-append table —
     the Delta ``DELETE FROM`` analog, time-travel preserved: every
@@ -811,23 +836,20 @@ def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
     # all touched jobs in one action (same bytes read — each file is
     # still scanned at most once — but job-count no longer grows with
     # the table's job count).
-    from pyspark.sql import functions as F
-
     probe = spark.read.option("mergeSchema", "true").parquet(
         *[os.path.join(path, f"{job_col}={j}") for j in jobs]
     )
-    # Anchor the job extraction to the LEAF directory (r15, advisor
-    # fix): matching the first `{job_col}=` anywhere in the URI breaks
-    # when a parent path segment happens to look like one (e.g.
-    # /data/__job_id=archive/tbl), and job_col must be regex-escaped.
-    job_rx = re.escape(job_col) + "=([^/]+)/[^/]*$"
-    affected = {
-        r[0]
-        for r in probe.filter(condition)
-        .select(F.regexp_extract(F.input_file_name(), job_rx, 1).alias("__job"))
-        .distinct()
-        .collect()
-    }
+    affected = _checked_jobs(
+        {
+            r[0]
+            for r in probe.filter(condition)
+            .select(_leaf_job(job_col).alias("__job"))
+            .distinct()
+            .collect()
+        },
+        jobs,
+        path,
+    )
     new_jobs: list[str] = []
     new_zones: dict = {}
     changed = False
@@ -1003,18 +1025,18 @@ def merge_versioned(
     # probe BEFORE the semi-join (r15 fix — the r14 ordering selected
     # it after the join and threw MULTI_SOURCES_UNSUPPORTED_FOR_
     # EXPRESSION whenever `updates` itself came from a file source).
-    # Regex anchored to the leaf directory + escaped, as delete_where's.
-    job_rx = re.escape(job_col) + "=([^/]+)/[^/]*$"
-    affected = {
-        r[0]
-        for r in probe.select(
-            *keys, F.regexp_extract(F.input_file_name(), job_rx, 1).alias("__job")
-        )
-        .join(F.broadcast(keyset), list(keys), "left_semi")
-        .select("__job")
-        .distinct()
-        .collect()
-    }
+    affected = _checked_jobs(
+        {
+            r[0]
+            for r in probe.select(*keys, _leaf_job(job_col).alias("__job"))
+            .join(F.broadcast(keyset), list(keys), "left_semi")
+            .select("__job")
+            .distinct()
+            .collect()
+        },
+        jobs,
+        path,
+    )
     new_jobs: list[str] = []
     new_zones: dict = {}
     for job in jobs:

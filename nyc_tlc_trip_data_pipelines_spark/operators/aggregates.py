@@ -716,6 +716,10 @@ def _u_threshold_to_h(t: float) -> int:
             hi = mid
         else:
             lo = mid
+    # h = 2⁶⁰ would format as 16 hex digits and break the CASE ladder's
+    # fixed-width (015x) lexicographic compare
+    if hi >= 1 << 60:
+        raise ValueError(f"CDF threshold {t!r} has no 15-hex-digit flip point")
     return hi
 
 

@@ -1,348 +1,77 @@
-"""Regression-gate invariants for bench.py (no Spark session needed).
+"""bench.py's job-count gate (no Spark session needed).
 
-Round-6 verdict item 2: the gate silently disabled itself when the
-newest BENCH_r*.json was the driver-written wrapper with
-``"parsed": null`` (only a head-truncated stdout ``tail``). These
-tests plant synthetic baselines — including that exact wrapper shape —
-and assert the gate still flags a 1.5× regression.
+A query's job count is deterministic for a fixed plan and fixture, so the
+gate compares it exactly against the committed baseline and must never
+pass a query silently: changed, new and unusable-baseline cases are all
+reported.
 """
 
 import importlib.util
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _bench():
-    if "bench" in sys.modules:
-        return sys.modules["bench"]
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["bench"] = mod
-    spec.loader.exec_module(mod)
-    return mod
+    if "bench" not in sys.modules:
+        spec = importlib.util.spec_from_file_location("bench", os.path.join(ROOT, "bench.py"))
+        mod = importlib.util.module_from_spec(spec)
+        sys.modules["bench"] = mod
+        spec.loader.exec_module(mod)
+    return sys.modules["bench"]
 
 
-def test_flat_timings_reads_parsed_wrapper():
+def _run(**jobs):
+    return {q: {"build_s": 0.1, "exec_s": 0.2, "jobs": n, "jobs_per_pass": [n] * 3}
+            for q, n in jobs.items()}
+
+
+def _baseline(tmp_path, **jobs):
+    path = tmp_path / "BENCH_LOCAL.json"
+    path.write_text(json.dumps({"sf": 0.1, "queries": _run(**jobs)}))
+    return str(path)
+
+
+def test_gate_flags_planted_job_count_regression(tmp_path):
+    path = _baseline(tmp_path, q_graph_bfs=90, q_topk=2)
+    g = _bench().gate(_run(q_graph_bfs=100, q_topk=2), path)
+    assert g["error"] is None and g["new"] == []
+    assert g["changed"] == [{"query": "q_graph_bfs", "was": 90, "now": [100] * 3}]
+
+
+def test_gate_passes_identical_counts(tmp_path):
+    path = _baseline(tmp_path, q_graph_bfs=100, q_topk=2)
+    g = _bench().gate(_run(q_graph_bfs=100, q_topk=2), path)
+    assert (g["error"], g["changed"], g["new"]) == (None, [], [])
+    assert g["wall_ratio"] == {"q_graph_bfs": 1.0, "q_topk": 1.0}
+
+
+def test_gate_flags_counts_that_vary_across_passes(tmp_path):
+    path = _baseline(tmp_path, q_topk=2)
+    run = _run(q_topk=2, q_graph_bfs=100)
+    for q in run:
+        run[q]["jobs_per_pass"] = [2, 3, 2]
+    g = _bench().gate(run, path)
+    assert [(c["query"], c["was"]) for c in g["changed"]] == [("q_topk", 2), ("q_graph_bfs", None)]
+    assert g["new"] == ["q_graph_bfs"]
+
+
+def test_gate_reports_query_missing_from_baseline_as_new(tmp_path):
+    path = _baseline(tmp_path, q_topk=2)
+    g = _bench().gate(_run(q_topk=2, q_graph_bfs=100), path)
+    assert g["new"] == ["q_graph_bfs"] and g["changed"] == [] and g["error"] is None
+
+
+def test_gate_reports_missing_or_unparseable_baseline(tmp_path):
     b = _bench()
-    wrapped = {"parsed": {"queries": {"q_a": 1.0}, "extended": {"q_b": 2.5}}}
-    assert b._flat_timings(wrapped) == {"q_a": 1.0, "q_b": 2.5}
-
-
-def test_flat_timings_reads_raw_object():
-    b = _bench()
-    raw = {"queries": {"q_a": 0.4}, "value": 0.4, "sf": 0.1}
-    assert b._flat_timings(raw) == {"q_a": 0.4}
-
-
-def test_tail_reconstruction_recovers_per_query_timings():
-    """The driver wrapper's tail is the LAST N chars of stdout — a
-    JSON fragment truncated at the START. The recovery regex must find
-    q_* timings in the fragment but NOT regression-list entries (whose
-    numbers live under "prev"/"now", not a q_* key)."""
-    b = _bench()
-    tail = (
-        'esolve": 0.271}, "versioned_io": {"q_time_travel": 1.076, '
-        '"q_compact": 1.185}, "regressions": [{"query": "q_compact", '
-        '"prev": 0.895, "now": 1.185, "ratio": 1.32}], "sf": 0.1}\n'
-    )
-    flat = b._flat_from_tail({"parsed": None, "tail": tail})
-    assert flat == {"q_time_travel": 1.076, "q_compact": 1.185}
-
-
-def test_gate_flags_planted_regression_through_null_parsed_wrapper(
-    tmp_path, monkeypatch
-):
-    """End-to-end: newest BENCH file is a parsed:null driver wrapper;
-    the gate must reconstruct the baseline from its tail and flag a
-    planted 1.5× slowdown instead of returning an empty list."""
-    b = _bench()
-    wrapper = {
-        "n": 7,
-        "rc": 0,
-        "parsed": None,
-        "tail": '..., "queries": {"q_agg_basic": 1.0, "q_topk": 0.2}, "sf": 0.1}\n',
-    }
-    path = tmp_path / "BENCH_r98.json"
-    path.write_text(json.dumps(wrapper))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_BASELINE", str(path))
-    name, regs = b._regressions({"q_agg_basic": 1.5, "q_topk": 0.21})
-    assert name == "BENCH_r98.json"
-    assert [r["query"] for r in regs] == ["q_agg_basic"]
-    assert regs[0]["ratio"] == 1.5
-
-
-def test_unusable_override_falls_back_to_walk(tmp_path, monkeypatch):
-    """A typo'd SPARK_GRAFT_BENCH_BASELINE must not turn the gate off:
-    the walk over BENCH_r*.json still supplies the baseline."""
-    b = _bench()
-    (tmp_path / "BENCH_r97.json").write_text(
-        json.dumps({"queries": {"q_agg_basic": 1.0}})
-    )
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_BASELINE", str(tmp_path / "nope.json"))
-    monkeypatch.setattr(b.os.path, "dirname", lambda p: str(tmp_path))
-    name, flat = b._baseline()
-    assert name == "BENCH_r97.json"
-    assert flat == {"q_agg_basic": 1.0}
-
-
-def test_baseline_walks_past_unusable_newest_file(tmp_path, monkeypatch):
-    """Without an explicit override, an unusable newest file (no
-    parsed dict, no recoverable tail) must fall back to the next
-    newest instead of neutering the gate."""
-    b = _bench()
-    (tmp_path / "BENCH_r99.json").write_text(json.dumps({"parsed": None, "tail": ""}))
-    (tmp_path / "BENCH_r98.json").write_text(
-        json.dumps({"queries": {"q_agg_basic": 1.0}})
-    )
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_BASELINE", raising=False)
-    monkeypatch.setattr(
-        b.os.path, "dirname", lambda p: str(tmp_path)
-    )
-    name, flat = b._baseline()
-    assert name == "BENCH_r98.json"
-    assert flat == {"q_agg_basic": 1.0}
-
-
-def test_spread_summary_and_regression_context():
-    """Round 8: the run's own pass-spread distribution is summarized
-    and each regression entry carries its query's spread ratio, so a
-    flag can be read against the measured noise floor."""
-    import bench as b
-
-    b._SPREADS.clear()
-    b._SPREADS.update({"q_a": 1.05, "q_b": 1.5, "q_c": 1.1})
-    s = b._spread_summary()
-    assert s["median"] == 1.1 and s["max"] == 1.5
-    # regression on q_b must carry its own spread
-    import json, os, tempfile
-    prev = {"queries": {"q_b": 1.0}}
-    with tempfile.TemporaryDirectory() as d:
-        path = os.path.join(d, "BENCH_r99.json")
-        with open(path, "w") as fh:
-            json.dump(prev, fh)
-        os.environ["SPARK_GRAFT_BENCH_BASELINE"] = path
-        try:
-            name, regs = b._regressions({"q_b": 2.0})
-        finally:
-            del os.environ["SPARK_GRAFT_BENCH_BASELINE"]
-    assert regs and regs[0]["query"] == "q_b"
-    assert regs[0]["pass_spread"] == 1.5
-    b._SPREADS.clear()
-
-
-def test_calm_gate_flags_real_regression_and_cancels_ambient(
-    tmp_path, monkeypatch
-):
-    """Round-9 (verdict item 4): with calm references on both sides,
-    a planted 1.3x+ PLAN regression (query moves, control doesn't)
-    still flags, while a machine-wide shift (query and control move
-    in lockstep) is dismissed into ambient_dismissed — auditable, not
-    silent."""
-    b = _bench()
-    prev = {
-        "queries": {"q_real": 1.0, "q_ambient": 1.0},
-        "controls": {"c:q_real": 0.10, "c:q_ambient": 0.10},
-        "control_sec": 0.10,
-    }
-    path = tmp_path / "BENCH_r98.json"
-    path.write_text(json.dumps(prev))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_BASELINE", str(path))
-    b._CONTROLS.clear()
-    # q_real: control flat (0.10), query 1.5x -> genuine regression
-    # q_ambient: control ALSO 1.5x -> whole-machine shift, calm ~1.0
-    b._CONTROLS.update({"q_real": 0.10, "q_ambient": 0.15})
-    try:
-        name, regs = b._regressions({"q_real": 1.5, "q_ambient": 1.5})
-    finally:
-        b._CONTROLS.clear()
-    assert name == "BENCH_r98.json"
-    assert [r["query"] for r in regs] == ["q_real"]
-    assert regs[0]["basis"] == "normalized" and regs[0]["ratio_calm"] == 1.5
-    assert [d["query"] for d in b._AMBIENT_DISMISSED] == ["q_ambient"]
-    assert b._AMBIENT_DISMISSED[0]["ratio_calm"] == 1.0
-
-
-def test_calm_references_recovered_from_tail():
-    """Driver wrappers keep only the stdout tail; the c:-prefixed
-    control keys and control_sec must be recoverable from it, and the
-    timing regex must never eat a c:-prefixed key."""
-    b = _bench()
-    tail = (
-        '"controls": {"c:q_agg_basic": 0.12, "c:q_topk": 0.11}, '
-        '"queries": {"q_agg_basic": 1.0}, "control_sec": 0.115, "sf": 0.1}\n'
-    )
-    per_q, run_level = b._flat_controls({"parsed": None, "tail": tail})
-    assert per_q == {"q_agg_basic": 0.12, "q_topk": 0.11}
-    assert run_level == 0.115
-    flat = b._flat_from_tail({"parsed": None, "tail": tail})
-    assert flat == {"q_agg_basic": 1.0}
-
-
-def test_flat_timings_skips_calm_and_retime_sections():
-    b = _bench()
-    raw = {
-        "queries": {"q_a": 0.4},
-        "controls": {"c:q_a": 0.1},
-        "retimes": {"q_a": {"first": 0.5, "retimed": 0.4}},
-    }
-    assert b._flat_timings(raw) == {"q_a": 0.4}
-
-
-def test_control_smoothing_kills_single_run_noise():
-    """Round-9: one outlier control run must not survive the windowed
-    median — the q_gini case (0.066 adjacent control vs 0.11 run
-    median flagged an unchanged, raw-FASTER query at 1.7x calm)."""
-    b = _bench()
-    b._CONTROLS.clear()
-    b._CONTROLS.update({
-        "q_a": 0.11, "q_b": 0.10, "q_gini": 0.066, "q_d": 0.12, "q_e": 0.11,
-    })
-    b._smooth_controls(window=5)
-    assert b._CONTROLS["q_gini"] == 0.11  # median of the 5-window
-    # neighbors keep sane values too (windows clipped at the edges)
-    assert 0.10 <= b._CONTROLS["q_a"] <= 0.11
-    b._CONTROLS.clear()
-
-
-def test_calm_flag_requires_raw_movement():
-    """A calm ratio inflated purely by control-reference noise (raw
-    barely moved) must not flag; a genuine regression (raw and calm
-    both up) must."""
-    b = _bench()
-    import json, os, tempfile
-    prev = {
-        "queries": {"q_noise": 1.0, "q_real": 1.0},
-        "controls": {"c:q_noise": 0.12, "c:q_real": 0.10},
-    }
-    with tempfile.TemporaryDirectory() as d:
-        path = os.path.join(d, "BENCH_r98.json")
-        with open(path, "w") as fh:
-            json.dump(prev, fh)
-        os.environ["SPARK_GRAFT_BENCH_BASELINE"] = path
-        b._CONTROLS.clear()
-        # q_noise: raw 1.05, control ref dropped 0.12->0.08 -> calm 1.6
-        # q_real: raw 1.5, control flat -> calm 1.5
-        b._CONTROLS.update({"q_noise": 0.08, "q_real": 0.10})
-        try:
-            name, regs = b._regressions({"q_noise": 1.05, "q_real": 1.5})
-        finally:
-            del os.environ["SPARK_GRAFT_BENCH_BASELINE"]
-            b._CONTROLS.clear()
-    assert [r["query"] for r in regs] == ["q_real"]
-
-
-def test_zero_control_rejected_explicitly(tmp_path, monkeypatch):
-    """Round-9 ADVICE: a control_sec of 0 (or a c: entry of 0) is an
-    invalid reference, not a falsy one — _flat_controls must report it
-    as missing deliberately, and _regressions must fall back to the
-    raw-ratio basis instead of dividing by zero or silently degrading
-    via truthiness."""
-    b = _bench()
-    import json
-
-    # zero run-level control -> None; zero per-query entries dropped
-    per_q, run_level = b._flat_controls(
-        {"queries": {"q_a": 1.0}, "controls": {"c:q_a": 0.0}, "control_sec": 0}
-    )
-    assert run_level is None and per_q == {}
-    # zero control in the tail is likewise rejected
-    per_q, run_level = b._flat_controls(
-        {"parsed": None, "tail": '"control_sec": 0, "sf": 0.1}\n'}
-    )
-    assert run_level is None
-    # end-to-end: baseline with zero controls -> raw basis still flags
-    prev = {
-        "queries": {"q_real": 1.0},
-        "controls": {"c:q_real": 0.0},
-        "control_sec": 0.0,
-    }
-    path = tmp_path / "BENCH_r97.json"
-    path.write_text(json.dumps(prev))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_BASELINE", str(path))
-    b._CONTROLS.clear()
-    b._CONTROLS.update({"q_real": 0.10})
-    try:
-        name, regs = b._regressions({"q_real": 1.5})
-    finally:
-        b._CONTROLS.clear()
-    assert [r["query"] for r in regs] == ["q_real"]
-    assert "ratio_calm" not in regs[0]  # raw basis, no bogus calm math
-
-
-def test_trend_two_pass_complement_of_recorded_half(monkeypatch, tmp_path):
-    """Round-13 verdict item 6: the parity-hash split assumed
-    consecutive runs see consecutive _upcoming_round values, which the
-    r12 history could not confirm (driver refresh + builder quiet run
-    can land at the same round number). The split now records the
-    2-pass half in the payload and the next run takes the COMPLEMENT
-    of the recorded half — two consecutive runs cover the full trend
-    set by construction, regardless of round-number cadence. New
-    queries (absent from the recorded half) start with 2 passes."""
-    import json as _json
-
-    B = _bench()
-    trend = ["q_a", "q_b", "q_c", "q_new"]
-    base = tmp_path / "BENCH_LOCAL.json"
-    base.write_text(_json.dumps({"trend_two_pass": ["q_a", "q_c"]}))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_BASELINE", str(base))
-    try:
-        got = B._resolve_two_pass(trend)
-        assert got == ["q_b", "q_new"]  # complement; new query included
-        assert {q: B._trend_passes(q) for q in trend} == {
-            "q_a": 1, "q_b": 2, "q_c": 1, "q_new": 2,
-        }
-        # run N+1 on N's recorded half → back to the other half: the
-        # union of any two consecutive runs is the full trend set
-        base.write_text(_json.dumps({"trend_two_pass": got}))
-        nxt = B._resolve_two_pass(trend)
-        assert sorted(set(nxt) | set(got)) == sorted(trend)
-        assert set(nxt) & set(got) == set()
-        # baseline without the field → parity fallback, near-even split
-        base.write_text(_json.dumps({"queries": {}}))
-        monkeypatch.setattr(B, "_upcoming_round", lambda: 13)
-        fallback = B._resolve_two_pass([f"q_{i}" for i in range(40)])
-        assert 10 <= len(fallback) <= 30
-    finally:
-        B._TWO_PASS_SET = None  # module is cached in sys.modules
-
-
-def test_trend_passes_alternates_by_round_parity(monkeypatch):
-    """Round-12 budget fit: the per-query 1/2-pass split must (a) be
-    deterministic within a round, (b) flip for every query between
-    consecutive rounds (so no query goes two rounds without a 2-pass
-    measurement), and (c) split the suite roughly in half."""
-    B = _bench()
-    B._TWO_PASS_SET = None  # exercise the parity fallback path
-    monkeypatch.setattr(B, "_upcoming_round", lambda: 12)
-    sections = (B.EXTENDED + B.VERSIONED_IO + B.CORPUS_OPS
-                + B.ANALYTICS_OPS + B.MINING_OPS + B.MULTIMODAL_OPS
-                + B.ROUND6_OPS + B.ROUND7_OPS + B.ROUND8_OPS)
-    at12 = {q: B._trend_passes(q) for q in sections}
-    assert at12 == {q: B._trend_passes(q) for q in sections}  # stable
-    monkeypatch.setattr(B, "_upcoming_round", lambda: 13)
-    at13 = {q: B._trend_passes(q) for q in sections}
-    assert all(at12[q] != at13[q] for q in sections)  # full alternation
-    two_pass = sum(1 for v in at12.values() if v == 2)
-    assert 0.3 <= two_pass / len(sections) <= 0.7  # near-even split
-
-
-def test_timed_pass_accepts_per_query_callable():
-    B = _bench()
-
-    class _Q:
-        def __init__(self, log, name):
-            self.log, self.name = log, name
-
-        def __call__(self, spark, sf):
-            self.log.append(self.name)
-            return self
-
-        def count(self):
-            return 0
-
-    log = []
-    qs = {"q_a": _Q(log, "q_a"), "q_b": _Q(log, "q_b")}
-    out = B._timed_pass(qs, ["q_a", "q_b"], None, None,
-                        passes=lambda n: 2 if n == "q_a" else 1)
-    assert set(out) == {"q_a", "q_b"}
-    assert log.count("q_a") == 2 and log.count("q_b") == 1
+    bad = tmp_path / "bad.json"
+    for content in ("{not json", json.dumps({"queries": {"q_topk": 1.5}}), None):
+        if content is None:
+            bad.unlink()
+        else:
+            bad.write_text(content)
+        g = b.gate(_run(q_topk=2), str(bad))
+        assert g["error"].startswith("unusable baseline")
+        assert g["new"] == ["q_topk"] and g["changed"] == []

@@ -476,6 +476,21 @@ def test_poisson_weight_string_thresholds_match_conv_formulation(spark):
     assert bad == 0
 
 
+def test_u_threshold_to_h_rejects_bound_past_15_hex_digits():
+    """A CDF threshold above 1.0 has no flip point below 2^60; returning
+    2^60 would format as 16 hex digits and silently break the CASE
+    ladder's fixed-width compare, so it must raise instead."""
+    import math
+
+    import pytest
+
+    from nyc_tlc_trip_data_pipelines_spark.operators import aggregates as agg
+
+    assert agg._u_threshold_to_h(1.0) < 1 << 60
+    with pytest.raises(ValueError, match="15-hex-digit"):
+        agg._u_threshold_to_h(math.nextafter(1.0, 2.0))
+
+
 def test_equidepth_histogram_uniform_and_skewed(spark):
     """Uniform 1..80 over 8 bins -> each bin holds exactly 10 rows with
     boundaries at multiples of 10; a heavy-hitter value collapses its

@@ -218,6 +218,19 @@ def test_delete_where_cow_preserves_time_travel(spark, tmp_path):
     assert IO.delete_where(spark, path, F.col("tag") == "nope") == 2
 
 
+def test_affected_job_check_rejects_nested_or_unknown_jobs():
+    """delete_where / merge_versioned read a file's job from its leaf
+    directory; '' (a file nested below its job directory) or a job the
+    tip does not list must raise, not read as "job unaffected"."""
+    from nyc_tlc_trip_data_pipelines_spark import io as IO
+
+    assert IO._checked_jobs({"b1"}, ["b1", "b2"], "t") == {"b1"}
+    assert IO._checked_jobs(set(), ["b1"], "t") == set()
+    for found in ({"b1", ""}, {"b1", "b9"}):
+        with pytest.raises(ValueError, match="outside the tip's job"):
+            IO._checked_jobs(found, ["b1", "b2"], "t")
+
+
 def test_merge_versioned_single_commit_upsert(spark, tmp_path):
     from nyc_tlc_trip_data_pipelines_spark import io as IO
 

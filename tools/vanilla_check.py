@@ -12,10 +12,10 @@ cold generic session.
 This script spawns the comparison in THIS process but builds the session
 with zero repo-specific configs (master + a small shuffle-partition
 count only, which the driver also sets), then runs the oracle comparison
-from tools/check.py over the first N registry keys (default: the
-driver-budget prefix of 50).
+from tools/check.py over the named queries (default: every id that has
+an oracle).
 
-Usage: python tools/vanilla_check.py [sf_dir] [n_prefix|query ...]
+Usage: python tools/vanilla_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -45,14 +45,7 @@ def vanilla_session():
 
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    rest = sys.argv[2:]
-    n_prefix = 50
-    only: set[str] = set()
-    for a in rest:
-        if a.isdigit():
-            n_prefix = int(a)
-        else:
-            only.add(a)
+    only = set(sys.argv[2:])
 
     import __spark_entry__ as E
 
@@ -65,7 +58,7 @@ def main():
 
     qs = E.queries()
     oracles = E.oracle_sql()
-    names = list(qs)[:n_prefix] if not only else [n for n in qs if n in only]
+    names = [n for n in qs if (n in only if only else n in oracles)]
     passed = failed = skipped = 0
     for name in names:
         t0 = time.time()
