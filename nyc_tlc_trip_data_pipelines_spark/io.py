@@ -47,6 +47,7 @@ from datetime import datetime, timezone
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, DecimalType, MapType, StructField, StructType
 
 # --- sources ---------------------------------------------------------------
 
@@ -418,6 +419,112 @@ def _tip_state(mio) -> tuple[int | None, list[str], set[str], dict]:
     return tip, jobs, raw, meta
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the schema Spark's file sources read back, whatever nullability the
+    writer's DataFrame declared (Spark's ``DataType.asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _merge_types(a: DataType, b: DataType, case_sensitive: bool) -> DataType:
+    """Spark's ``StructType.merge`` — the rules Spark's parquet schema
+    merging applies to footers: struct fields match by name
+    (case-insensitively unless ``spark.sql.caseSensitive``) and keep the
+    left name, order and metadata, with the right side's new fields
+    appended; arrays, maps and structs merge element-wise; decimals of
+    one scale widen to the larger precision; any other pair must be
+    equal. A conflict raises ``ValueError`` naming the field path."""
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        key = (lambda n: n) if case_sensitive else str.lower
+        right = {key(f.name): f for f in b.fields}
+        fields = []
+        for f in a.fields:
+            g = right.get(key(f.name))
+            if g is not None:
+                try:
+                    dt = _merge_types(f.dataType, g.dataType, case_sensitive)
+                except ValueError as e:
+                    raise ValueError(f"field {f.name!r}: {e}") from None
+                f = StructField(f.name, dt, f.nullable or g.nullable, f.metadata)
+            fields.append(f)
+        left = {key(f.name) for f in a.fields}
+        return StructType(fields + [g for g in b.fields if key(g.name) not in left])
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        return ArrayType(
+            _merge_types(a.elementType, b.elementType, case_sensitive),
+            a.containsNull or b.containsNull,
+        )
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        return MapType(
+            _merge_types(a.keyType, b.keyType, case_sensitive),
+            _merge_types(a.valueType, b.valueType, case_sensitive),
+            a.valueContainsNull or b.valueContainsNull,
+        )
+    if isinstance(a, DecimalType) and isinstance(b, DecimalType) and a.scale == b.scale:
+        return DecimalType(max(a.precision, b.precision), a.scale)
+    if a == b:
+        return a
+    raise ValueError(f"incompatible types {a.simpleString()} and {b.simpleString()}")
+
+
+def _union_schema(recorded: StructType | None, written: StructType | None) -> StructType | None:
+    """The schema the next manifest records: the table's recorded schema
+    merged with the schema of the data this commit wrote, read-nullable.
+    Pure Python — no Spark action; a type conflict raises ``ValueError``
+    at commit time instead of failing every later read."""
+    if written is None:
+        return recorded
+    written = _as_nullable(written)
+    if recorded is None or recorded == written:
+        return written
+    active = SparkSession.getActiveSession()
+    case_sensitive = active is not None and (
+        active.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
+    )
+    try:
+        return _merge_types(recorded, written, case_sensitive)
+    except ValueError as e:
+        raise ValueError(
+            f"schema conflict with the table's recorded schema: {e} "
+            f"(recorded {recorded.simpleString()}, written {written.simpleString()})"
+        ) from None
+
+
+def _recorded_schema(meta: dict) -> StructType | None:
+    """The ``schema`` field of a manifest, or None when it has none."""
+    s = meta.get("schema")
+    return None if s is None else StructType.fromJson(s)
+
+
+def _table_schema(path: str, tip_meta: dict) -> StructType | None:
+    """The versioned table's schema, read from its TIP manifest (the
+    cumulative union of every commit's written schema) — no footer
+    read, no Spark job. None on an empty table. A manifest written
+    before the field existed derives it the old way, once per call: one
+    ``mergeSchema`` footer merge over the table root (a Spark job); the
+    table's next commit records the field."""
+    if not tip_meta or "schema" in tip_meta:
+        return _recorded_schema(tip_meta)
+    merged = SparkSession.active().read.option("mergeSchema", "true").parquet(path)
+    return _as_nullable(merged.drop(tip_meta["job_col"]).schema)
+
+
+def _scan(spark: SparkSession, schema: StructType, paths: Sequence[str]) -> DataFrame:
+    """Parquet scan of job directories or files under a known schema —
+    the only read shape of the versioned layer (no inference)."""
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def _zone_json(v):
     """Canonical JSON-safe encoding for zone-map bounds: numbers and
     strings as-is, date/timestamp as ISO strings (lexicographic order
@@ -452,12 +559,16 @@ def _zone_json(v):
     return NotImplemented
 
 
-def _collect_zone_stats(spark: SparkSession, job_dir: str, cols: Sequence[str]) -> dict:
+def _collect_zone_stats(
+    spark: SparkSession, job_dir: str, cols: Sequence[str], schema: StructType
+) -> dict:
     """Per-file min/max/rows for ``cols`` over one job's partition
-    directory — the stats a manifest commit embeds (Delta keeps the
-    same per-file stats in its log's ``add`` actions). ONE distributed
-    scan groups by ``input_file_name``; the driver collects one row per
-    FILE (bounded metadata, never table rows). Returns
+    directory, whose data the caller just wrote under ``schema`` — the
+    stats a manifest commit embeds (Delta keeps the same per-file stats
+    in its log's ``add`` actions). ONE distributed scan groups by
+    ``input_file_name`` (the known schema spares a footer-inference
+    job); the driver collects one row per FILE (bounded metadata, never
+    table rows). Returns
     ``{file_basename: {"rows": n, col: [lo, hi], ...}}``; columns whose
     bounds don't JSON-encode order-preservingly are silently omitted
     (no stats → no pruning on them).
@@ -473,7 +584,7 @@ def _collect_zone_stats(spark: SparkSession, job_dir: str, cols: Sequence[str]) 
     byte-comparable under the conditional-PUT claim."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(job_dir)
+    df = _scan(spark, schema, [job_dir])
     present = [c for c in cols if c in df.columns]
     dtypes = dict(df.dtypes)
     # Temporal KIND tag (round 14): date/timestamp bounds get a third
@@ -685,8 +796,12 @@ def append_versioned(
       on S3 — the scaling role of Delta's checkpoints) and remembers
       vacuumed history forever.
     - **time travel**: :func:`read_version` resolves version N to its
-      job set and reads exactly those partition directories (partition
-      pruning makes the filter a directory selection, not a row scan).
+      job set and scans exactly those job directories.
+    - **schema**: every manifest records the table schema — the tip's
+      recorded schema merged (Spark's schema-merging rules) with
+      ``df.schema`` — so readers never infer one from footers; a
+      column type that conflicts with the table's raises
+      ``ValueError`` before any byte is written.
 
     Unlike :func:`append_idempotent` (dynamic partition overwrite, which
     stages every concurrent job under the shared ``<path>/_temporary``
@@ -730,22 +845,25 @@ def append_versioned(
     # remembers both) must not write bytes — re-overwriting a
     # directory that older manifests still reference, or re-appending
     # rows a DELETE removed, both corrupt time travel.
-    tip, _jobs, raw, _meta = _tip_state(mio)
+    tip, _jobs, raw, meta = _tip_state(mio)
     if job_id in _with_bases(raw):
         return tip
+    # the table schema after this commit; a type conflict raises here,
+    # before any byte is written
+    schema = _union_schema(_table_schema(path, meta), df.schema)
     job_dir = os.path.join(path, f"{job_col}={job_id}")
     df.write.mode("overwrite").parquet(job_dir)
     new_zones = (
         {
             job_id: _pack_zones(
-                path, job_id, _collect_zone_stats(df.sparkSession, job_dir, zone_stats)
+                path,
+                job_id,
+                _collect_zone_stats(df.sparkSession, job_dir, zone_stats, df.schema),
             )
         }
         if zone_stats
         else None
     )
-    import uuid
-
     while True:
         tip, jobs, raw, tip_meta = _tip_state(mio)
         if job_id in _with_bases(raw):
@@ -756,23 +874,49 @@ def append_versioned(
         # in the S3 412 self-claim compare (see _commit_manifest); the
         # loser's False here just loops, re-reads, and hits the
         # ever-union dedup above — idempotency is unaffected.
-        payload = {
-            "version": n,
-            "job_col": job_col,
-            "job_ids": jobs + [job_id],
-            "ever": sorted(raw | {job_id}),
-            "writer": uuid.uuid4().hex,
-        }
-        zones = _carry_zones(tip_meta, payload["job_ids"], new_zones)
-        if zones:
-            payload["zones"] = zones
-        if tip_meta.get("clustering"):
-            # carried like ever/zones — appends must not make the table
-            # forget it was clustered (round-14 verdict item 4)
-            payload["clustering"] = tip_meta["clustering"]
+        payload = _manifest_payload(
+            n, job_col, jobs + [job_id], raw | {job_id}, tip_meta, new_zones, schema
+        )
         if not mio.try_commit(n, payload):
             continue  # lost the race — re-read and claim the next version
         return n
+
+
+def _manifest_payload(
+    n: int,
+    job_col: str,
+    job_ids: list[str],
+    ever: set[str],
+    tip_meta: dict,
+    new_zones: dict | None,
+    schema: StructType | None,
+    clustering: dict | None = None,
+) -> dict:
+    """The body of manifest ``v{n}``. Besides the job set, the
+    cumulative ``ever`` and the per-writer ``writer`` nonce, it carries
+    forward from the tip: ``zones`` (see :func:`_carry_zones`),
+    ``clustering`` (unless this commit records a new one) and
+    ``schema`` — the tip's recorded schema merged with ``schema``, the
+    schema of the data this commit wrote (:func:`_union_schema`)."""
+    import uuid
+
+    payload = {
+        "version": n,
+        "job_col": job_col,
+        "job_ids": job_ids,
+        "ever": sorted(ever),
+        "writer": uuid.uuid4().hex,
+    }
+    zones = _carry_zones(tip_meta, job_ids, new_zones)
+    if zones:
+        payload["zones"] = zones
+    clus = clustering if clustering is not None else tip_meta.get("clustering")
+    if clus:
+        payload["clustering"] = clus
+    st = _union_schema(_recorded_schema(tip_meta), schema)
+    if st is not None:
+        payload["schema"] = st.jsonValue()
+    return payload
 
 
 def _leaf_job(job_col: str) -> Column:
@@ -829,16 +973,15 @@ def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
         raise ValueError(f"no versions committed under {path}")
     job_col = _meta["job_col"]
     tip_zones = _meta.get("zones") or {}
+    st = _table_schema(path, _meta)
     # Affected-job discovery in ONE pass (r14 optimization): the
     # per-job ``read + filter + limit(1).count()`` probe cost one
     # schema-inference job plus one probe action PER committed job; a
-    # single partition-aware scan over every current directory finds
-    # all touched jobs in one action (same bytes read — each file is
-    # still scanned at most once — but job-count no longer grows with
-    # the table's job count).
-    probe = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f"{job_col}={j}") for j in jobs]
-    )
+    # single scan over every current directory, under the recorded
+    # schema, finds all touched jobs in one action (same bytes read —
+    # each file is still scanned at most once — but job-count no
+    # longer grows with the table's job count).
+    probe = _scan(spark, st, [os.path.join(path, f"{job_col}={j}") for j in jobs])
     affected = _checked_jobs(
         {
             r[0]
@@ -858,7 +1001,7 @@ def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
         if job not in affected:
             new_jobs.append(job)  # untouched — directory reused as-is
             continue
-        dfj = spark.read.parquet(part)
+        dfj = _scan(spark, st, [part])
         changed = True
         new_job = f"{job}.d{cur_v + 1}"
         new_dir = os.path.join(path, f"{job_col}={new_job}")
@@ -872,12 +1015,17 @@ def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
         zcols = sorted(_zone_stat_cols(path, tip_zones.get(job)))
         if zcols:
             new_zones[new_job] = _pack_zones(
-                path, new_job, _collect_zone_stats(spark, new_dir, zcols)
+                path, new_job, _collect_zone_stats(spark, new_dir, zcols, st)
             )
     if not changed:
         return cur_v
     return _commit_manifest(
-        path, job_col, new_jobs, base_version=cur_v, new_zones=new_zones or None
+        path,
+        job_col,
+        new_jobs,
+        base_version=cur_v,
+        new_zones=new_zones or None,
+        schema=st,
     )
 
 
@@ -894,9 +1042,14 @@ def _commit_manifest(
     base_version: int | None = None,
     new_zones: dict | None = None,
     clustering: dict | None = None,
+    schema: StructType | None = None,
 ) -> int:
     """Atomically commit the next manifest version (write-fsync-link
-    optimistic claim shared by append/delete/merge).
+    optimistic claim shared by delete/merge/optimize/vacuum).
+    ``schema`` is the schema of the data the caller wrote (for a COW
+    rewrite, the table schema it read under); the manifest records its
+    union with the tip's (:func:`_manifest_payload`). ``None`` carries
+    the tip's recorded schema forward unchanged.
 
     When ``base_version`` is given (delete/merge: the rewrite was
     computed FROM that version), the commit claims exactly
@@ -932,8 +1085,6 @@ def _commit_manifest(
     passed, so a later maintenance OPTIMIZE knows the table WAS
     clustered and on what.
     """
-    import uuid
-
     mio = _manifest_io(path)
     while True:
         tip, _jobs, raw, _meta = _tip_state(mio)
@@ -944,19 +1095,9 @@ def _commit_manifest(
                 "copy-on-write rewrite; re-run the operation against the new base"
             )
         n = latest + 1
-        payload = {
-            "version": n,
-            "job_col": job_col,
-            "job_ids": job_ids,
-            "ever": sorted(raw | set(job_ids)),
-            "writer": uuid.uuid4().hex,
-        }
-        zones = _carry_zones(_meta, job_ids, new_zones)
-        if zones:
-            payload["zones"] = zones
-        clus = clustering if clustering is not None else _meta.get("clustering")
-        if clus:
-            payload["clustering"] = clus
+        payload = _manifest_payload(
+            n, job_col, job_ids, raw | set(job_ids), _meta, new_zones, schema, clustering
+        )
         if mio.try_commit(n, payload):
             return n
         if base_version is not None:
@@ -1010,16 +1151,18 @@ def merge_versioned(
         )
     job_col = _meta["job_col"]
     tip_zones = _meta.get("zones") or {}
+    st = _table_schema(path, _meta)
+    # the table schema after this commit; a type conflict between the
+    # updates and the table raises here, before any byte is written
+    schema = _union_schema(st, updates.schema)
     from pyspark.sql import functions as F
 
     keyset = updates.select(*keys).distinct()
     # One-pass affected-job discovery (r14 optimization — same move and
-    # rationale as delete_where's): a single partition-aware scan
-    # replaces the per-job semi-join probe, so matched-job discovery is
-    # one action regardless of how many jobs the tip holds.
-    probe = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f"{job_col}={j}") for j in jobs]
-    )
+    # rationale as delete_where's): a single scan under the recorded
+    # schema replaces the per-job semi-join probe, so matched-job
+    # discovery is one action regardless of how many jobs the tip holds.
+    probe = _scan(spark, st, [os.path.join(path, f"{job_col}={j}") for j in jobs])
     # `input_file_name()` is only legal over a plan with ONE file
     # source, so the job id must be extracted from the single-source
     # probe BEFORE the semi-join (r15 fix — the r14 ordering selected
@@ -1044,7 +1187,7 @@ def merge_versioned(
         if job not in affected:
             new_jobs.append(job)  # no matched keys — reuse as-is
             continue
-        dfj = spark.read.parquet(part)
+        dfj = _scan(spark, st, [part])
         new_job = f"{job}.m{cur_v + 1}"
         new_dir = os.path.join(path, f"{job_col}={new_job}")
         dfj.join(F.broadcast(keyset), list(keys), "left_anti").write.mode(
@@ -1057,7 +1200,7 @@ def merge_versioned(
         zcols = sorted(_zone_stat_cols(path, tip_zones.get(job)))
         if zcols:
             new_zones[new_job] = _pack_zones(
-                path, new_job, _collect_zone_stats(spark, new_dir, zcols)
+                path, new_job, _collect_zone_stats(spark, new_dir, zcols, st)
             )
     updates.write.mode("overwrite").parquet(os.path.join(path, f"{job_col}={job_id}"))
     return _commit_manifest(
@@ -1066,6 +1209,7 @@ def merge_versioned(
         new_jobs + [job_id],
         base_version=cur_v,
         new_zones=new_zones or None,
+        schema=schema,
     )
 
 
@@ -1234,22 +1378,26 @@ def read_version(
     prune: Sequence[tuple] | None = None,
 ) -> DataFrame:
     """Read a versioned-append table AS OF ``version`` (default: latest).
-    The manifest's job set becomes an IN-filter on the partition column —
-    pure directory pruning, so reading v1 of a 1000-version table scans
-    only v1's files.
+    The version's manifest names its live job directories, and exactly
+    those are scanned — never the table root, so directories left dead
+    by copy-on-write rewrites are not even listed, and reading v1 of a
+    1000-version table scans only v1's files.
 
-    Reads with ``mergeSchema`` so versioned appends COMPOSE with
-    additive schema evolution: a column added by a later append
-    surfaces as NULL in earlier jobs' rows instead of being silently
-    dropped by the default footer-on-faith schema (the exact trap
-    :func:`read_parquet_merged`'s docstring warns about). At 100 TB
-    scale cache the merged schema in a catalog rather than re-merging
-    footers per read.
+    The schema comes from the TIP manifest's ``schema`` field: the
+    cumulative union, under Spark's schema-merging rules, of every
+    commit's written schema (Delta's log carries the table schema the
+    same way, in its ``metaData`` action). So a snapshot resolves
+    without opening a data file — building the DataFrame runs no Spark
+    job (a version with more job directories than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` still
+    lists them in one) — and versioned appends still COMPOSE with
+    additive schema evolution: a column added by a later append reads
+    as NULL in earlier jobs' rows, in latest and AS-OF reads alike. A
+    table whose tip predates the field pays one footer-merge job per
+    read until its next commit records it (:func:`_table_schema`).
 
-    Round 12: resolves via a name-only manifest LIST plus ONE manifest
-    GET — the read analog of the ``ever`` commit-path fix; previously
-    every AS-OF read fetched EVERY manifest body just to look up one
-    version's job set.
+    Resolves via a name-only manifest LIST plus the version's manifest
+    GET (and the tip's, for an AS-OF read).
 
     ``prune`` (round 13): conjunctive simple predicates
     ``[(col, op, value), ...]`` with op in ``=,==,<,<=,>,>=,in``
@@ -1273,42 +1421,30 @@ def read_version(
     nums = mio.list_version_numbers()
     if not nums:
         raise ValueError(f"no versions committed under {path}")
-    n = max(nums) if version is None else version
+    tip = max(nums)
+    n = tip if version is None else version
     if n not in set(nums):
         raise ValueError(f"version {n} not found under {path} (have {nums})")
     meta = mio.read_meta(n)
-    job_col = meta["job_col"]
+    st = _table_schema(path, meta if n == tip else mio.read_meta(tip))
     conj = _normalize_prune(prune)
-    df = None
+    out = None
     if conj:
-        paths, _kept, _total = _zone_select(path, meta, conj)
-        if paths is not None:
-            if paths:
-                try:
-                    df = (
-                        spark.read.option("mergeSchema", "true")
-                        .option("basePath", path)
-                        .parquet(*paths)
-                    )
-                except AnalysisException:
-                    # Round-14 ADVICE: the manifest's zone file names can
-                    # go stale — a concurrent retry of the same job_id
-                    # may overwrite its directory (fresh part-file names)
-                    # between the committer's stats scan and its commit.
-                    # A missing file must degrade to the UNPRUNED read
-                    # (correct, just slower), never fail the query.
-                    df = None
-            else:
-                # every zone-covered file disproved the predicate and no
-                # unzoned job remains — empty result, full-table schema
-                df = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(path)
-                    .filter(F.lit(False))
-                )
-    if df is None:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-    out = df.filter(df[job_col].isin(list(meta["job_ids"]))).drop(job_col)
+        files, _kept, _total = _zone_select(path, meta, conj)
+        if files is not None:
+            try:
+                out = _scan(spark, st, files)
+            except AnalysisException:
+                # Round-14 ADVICE: the manifest's zone file names can
+                # go stale — a concurrent retry of the same job_id may
+                # overwrite its directory (fresh part-file names)
+                # between the committer's stats scan and its commit.
+                # A missing file must degrade to the UNPRUNED read
+                # (correct, just slower), never fail the query.
+                out = None
+    if out is None:
+        job_col = meta["job_col"]
+        out = _scan(spark, st, [os.path.join(path, f"{job_col}={j}") for j in meta["job_ids"]])
     for c, op, _nv, v in conj:
         col = out[c]
         if op == "in":
@@ -1818,8 +1954,13 @@ def optimize_versioned(
         else ({"cluster_by": []} if explicit_unclustered else None)
     )
 
+    st = _table_schema(path, _meta)
+
+    def _dir(job: str) -> str:
+        return os.path.join(path, f"{job_col}={job}")
+
     def _dir_bytes(job: str) -> int:
-        d = spark.read.parquet(os.path.join(path, f"{job_col}={job}"))
+        d = _scan(spark, st, [_dir(job)])
         return int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
     keep_jobs: list[str] = []
@@ -1829,11 +1970,9 @@ def optimize_versioned(
         if len(small) < 2:
             return cur_v  # no tail to fold — nothing to gain, mint nothing
         keep_jobs = [j for j in jobs if j not in set(small)]
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f"{job_col}={j}") for j in small]
-        )
+        df = _scan(spark, st, [_dir(j) for j in small])
     else:
-        df = read_version(spark, path, cur_v)
+        df = _scan(spark, st, [_dir(j) for j in jobs])
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     n_out = max(1, math.ceil(size / (target_mb * 1024 * 1024)))
     new_job = f"optimize.o{cur_v + 1}"
@@ -1853,7 +1992,7 @@ def optimize_versioned(
         )
     else:
         out = df.repartition(n_out)
-    job_dir = os.path.join(path, f"{job_col}={new_job}")
+    job_dir = _dir(new_job)
     out.write.mode("overwrite").parquet(job_dir)
     # Record per-file min/max for the cluster columns (or an explicit
     # list) in the manifest — the Delta-log-style stats that make the
@@ -1874,7 +2013,7 @@ def optimize_versioned(
             inherited |= _zone_stat_cols(path, tip_zones.get(j))
         stat_cols = sorted(inherited)
     new_zones = (
-        {new_job: _pack_zones(path, new_job, _collect_zone_stats(spark, job_dir, stat_cols))}
+        {new_job: _pack_zones(path, new_job, _collect_zone_stats(spark, job_dir, stat_cols, st))}
         if stat_cols
         else None
     )
@@ -1888,6 +2027,7 @@ def optimize_versioned(
         base_version=cur_v,
         new_zones=new_zones,
         clustering=clustering,
+        schema=st,
     )
 
 

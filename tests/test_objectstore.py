@@ -10,6 +10,7 @@ approximation: re-running a failed batch must not duplicate rows.
 import os
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from nyc_tlc_trip_data_pipelines_spark import io as eio
 from nyc_tlc_trip_data_pipelines_spark import objectstore as obs
@@ -325,6 +326,9 @@ class _FakeWriter:
         self._log.append(p)
 
 
+_FAKE_SCHEMA = StructType([StructField("k", LongType())])
+
+
 class _FakeDF:
     """Stands in for a DataFrame in tests that exercise the MANIFEST
     layer over moto-S3 — the sandbox Spark has no s3a connector, so
@@ -336,6 +340,11 @@ class _FakeDF:
     @property
     def write(self):
         return _FakeWriter(self._log)
+
+    @property
+    def schema(self):
+        # a real DataFrame always carries one; every commit records it
+        return _FAKE_SCHEMA
 
 
 def test_put_text_if_absent_local(tmp_path):

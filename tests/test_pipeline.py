@@ -334,7 +334,7 @@ def test_cow_commit_detects_concurrent_writer(spark, tmp_path):
     # claim the v1 slot out from under the COW commit
     orig = IO._commit_manifest
 
-    def _race_then_commit(p, job_col, job_ids, base_version=None, new_zones=None):
+    def _race_then_commit(p, job_col, job_ids, base_version=None, **kw):
         mdir = _os.path.join(p, "_manifests")
         slot = _os.path.join(mdir, "v1.json")
         if not _os.path.exists(slot):
@@ -342,7 +342,7 @@ def test_cow_commit_detects_concurrent_writer(spark, tmp_path):
                 _json.dump(
                     {"version": 1, "job_col": job_col, "job_ids": ["b1", "b9"]}, fh
                 )
-        return orig(p, job_col, job_ids, base_version, new_zones=new_zones)
+        return orig(p, job_col, job_ids, base_version, **kw)
 
     IO._commit_manifest = _race_then_commit
     try:
@@ -432,8 +432,10 @@ def test_read_version_merges_schema(spark, tmp_path):
     assert "extra" in latest.columns
     rows = {r.id: r for r in latest.collect()}
     assert rows[1].extra is None and rows[2].extra == 9.5
-    # time travel to v0 still works (column may be absent or NULL there)
-    assert IO.read_version(spark, path, 0).count() == 1
+    # time travel to v0 reads under the table's schema: NULL there
+    assert [tuple(r) for r in IO.read_version(spark, path, 0).collect()] == [(1, None)]
+    changes = IO.table_changes(spark, path, 0, 1)
+    assert [tuple(r) for r in changes.collect()] == [(2, 9.5, "insert")]
 
 
 def test_table_changes_cdf_between_versions(spark, tmp_path):
